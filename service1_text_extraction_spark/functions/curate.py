@@ -21,14 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import dedup, textstats
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .spread import spread_input
-
-    return spread_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
-    )
-
+from .spread import read_docs
 
 MIN_QUALITY = 0.5
 
@@ -38,7 +31,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep exact-dedup keepers whose quality clears MIN_QUALITY and
     whose language is identified."""
     base = (
-        _docs(spark, sf_dir)
+        read_docs(spark, sf_dir)
         .select(
             "doc_id", "text", F.expr(textstats._TOKENS).alias("t")
         )
@@ -112,7 +105,7 @@ def sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (no shuffle of the corpus) followed by one 20-row
     hash-aggregate with map-side combine — the 100 TB form writes the
     kept rows and this rollup in the same pass."""
-    d = _docs(spark, sf_dir).select(
+    d = read_docs(spark, sf_dir).select(
         "doc_id", "source"
     )
     # a source whose suffix fails to parse gets NULL rate; its rows
@@ -171,7 +164,7 @@ def sample_exact_quota(
 
     h = F.md5(F.concat(F.lit("quota:"), F.col("doc_id").cast("string")))
     base = (
-        _docs(spark, sf_dir)
+        read_docs(spark, sf_dir)
         .select(
             "doc_id", "source", F.substring(h, 1, 16).alias("hk")
         )
@@ -239,7 +232,7 @@ def admit_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tokenizer re-runs once per signal reference (measured: 14
     ``split()`` copies in the pushed-down plan; plan-pinned to 1)."""
     admitted = (
-        _docs(spark, sf_dir)
+        read_docs(spark, sf_dir)
         # r7: evaluate the let-bound predicate in a PROJECTION above
         # the input-spread exchange (projections are not pushed below
         # it; a WHERE is) and filter behind a checkpoint barrier —
@@ -351,7 +344,7 @@ def wsample_keyed(docs: DataFrame) -> DataFrame:
 
 
 def _docs_w(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir)
+    return read_docs(spark, sf_dir)
 
 
 def corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,33 +14,37 @@ fewer partitions than the session's parallelism. On a real corpus
 (many files / many row groups, >= cores scan tasks) the condition is
 false and the plan is untouched — the spread never fires at 100 TB; it
 exists precisely for inputs whose layout undercuts the cluster. The
-exchange it adds is round-robin over the scan's raw columns (the
-repartition sits directly on the read, before any projection, so
-column pruning still reaches the scan and pushed filters stay pushed —
-Catalyst moves both through a Repartition node).
+exchange it adds hash-partitions the scan's raw rows on the table's
+unique id column (the repartition sits directly on the read, before
+any projection, so column pruning still reaches the scan and pushed
+filters stay pushed — Catalyst moves both through a Repartition node).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def spread_input(df: DataFrame, key: str | None = None) -> DataFrame:
+def spread_input(df: DataFrame, key: str) -> DataFrame:
     """Spread a freshly read DataFrame across the session's cores iff
     its planned scan has fewer partitions (an unsplittable /
     few-row-group input); identity otherwise.
 
-    ``key`` (a unique id column) selects HASH partitioning on that
-    key: deterministic under task retries like any hash exchange, and
-    — unlike keyless ``repartition(n)`` — free of the
+    The spread HASH-partitions on ``key`` (a unique id column):
+    deterministic under task retries like any hash exchange, and —
+    unlike keyless ``repartition(n)`` — free of the
     sortBeforeRepartition local sort, which on a text-heavy table
     costs more than the shuffle itself (guide §2.5: derive synthetic
     spread keys deterministically; a unique id hashes uniformly)."""
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
-        if key is not None:
-            return df.repartition(n, F.col(key))
-        return df.repartition(n)
+        return df.repartition(n, F.col(key))
     return df
+
+
+def read_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table, spread on its ``doc_id`` key."""
+    return spread_input(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
+    )

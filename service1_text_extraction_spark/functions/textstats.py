@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..kernels import textnorm as _tn
+from .spread import read_docs
 
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "for", "with"],
@@ -23,14 +24,6 @@ STOPWORDS = {
 _TOKENS = "filter(split(lower(text), '\\\\s+'), x -> x != '')"
 # BPE-ish tokenization: letter runs, digit runs, single punctuation
 BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .spread import spread_input
-
-    return spread_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
-    )
 
 
 def _stop_count(lang: str) -> F.Column:
@@ -64,7 +57,7 @@ def with_lang_pred(df: DataFrame, keep_scores: bool = False) -> DataFrame:
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID (n-gram-heuristic family). Ties and
     zero-evidence rows resolve to 'und' / first-wins deterministically."""
-    df = _docs(spark, sf_dir).select(
+    df = read_docs(spark, sf_dir).select(
         "doc_id", F.expr(_TOKENS).alias("t")
     )
     return with_lang_pred(df).select("doc_id", "lang_pred")
@@ -96,7 +89,7 @@ def quality_expr(stop_en: F.Column | None = None) -> F.Column:
 
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length / punctuation / stopword quality heuristics -> [0, 1]."""
-    df = _docs(spark, sf_dir).select(
+    df = read_docs(spark, sf_dir).select(
         "doc_id", "text", F.expr(_TOKENS).alias("t")
     )
     return df.select(
@@ -111,7 +104,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokens + BPE-ish regex tokens per document."""
-    return _docs(spark, sf_dir).select(
+    return read_docs(spark, sf_dir).select(
         "doc_id",
         F.expr(f"size({_TOKENS})").cast("long").alias("ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(BPE_PATTERN), F.lit(0)))
@@ -120,17 +113,14 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# doc_fingerprint strategy: "arrow" (default) computes each document's
-# min-over-8-gram md5 in ONE Arrow-batched map — the SQL form
-# materializes a length(text)-element array of 32-char hash strings
-# per row through an interpreted (CodegenFallback) transform, which at
-# sf1.0 costs 18.7 s for a map-only query; the Arrow kernel streams
-# C-backed digests with no array ever built (1.0 s, guide §4.2).
-# "sql" keeps the expression form the DuckDB oracle mirrors; both are
-# the same md5 bytes, and min-by-digest == min-by-hex because hex
-# encoding is a byte-wise monotone map (pinned by
-# test_fingerprint_paths_agree).
-FP_STRATEGY = "arrow"
+# doc_fingerprint computes each document's min-over-8-gram md5 in ONE
+# Arrow-batched map — the SQL form the DuckDB oracle keeps materializes
+# a length(text)-element array of 32-char hash strings per row through
+# an interpreted (CodegenFallback) transform, which at sf1.0 costs
+# 18.7 s for a map-only query; the Arrow kernel streams C-backed digests
+# with no array ever built (1.0 s, guide §4.2). Both are the same md5
+# bytes, and min-by-digest == min-by-hex because hex encoding is a
+# byte-wise monotone map.
 FP_GRAM = 8
 
 
@@ -172,28 +162,14 @@ def _fp_min_md5_udf():
     return fp
 
 
-def doc_fingerprint(
-    spark: SparkSession, sf_dir: str, hash_fn: str = "md5"
-) -> DataFrame:
-    """Rolling-hash document fingerprint: the minimum hash over all
+def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling-hash document fingerprint: the minimum md5 over all
     char 8-grams (winnowing-style min-sampling, window = whole doc).
-    md5 is the verified default (DuckDB computes identical digests, so
-    the oracle checks values); at 100 TB pass ``hash_fn='xxhash64'``
-    for an 8-byte bigint fingerprint (bench delta in
-    BENCH/BASELINE.md). Strategy-routed (FP_STRATEGY): the default
-    Arrow map emits the identical hex strings with zero exchanges and
-    no per-row hash array."""
-    df = _docs(spark, sf_dir)
-    if FP_STRATEGY == "arrow" and hash_fn == "md5":
-        return df.select(
-            "doc_id", _fp_min_md5_udf()(F.col("text")).alias("fingerprint")
-        )
-    grams = F.expr(
-        "transform(sequence(1, greatest(length(text)-7, 1)), "
-        f"i -> {hash_fn}(substring(text, i, 8)))"
-    )
-    return df.select(
-        "doc_id", F.array_min(grams).alias("fingerprint")
+    DuckDB computes identical digests, so the oracle checks values.
+    The Arrow map emits the hex strings with zero exchanges and no
+    per-row hash array."""
+    return read_docs(spark, sf_dir).select(
+        "doc_id", _fp_min_md5_udf()(F.col("text")).alias("fingerprint")
     )
 
 
@@ -223,7 +199,7 @@ def clean_unicode_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned = F.translate(cleaned, TRANS_FROM, TRANS_TO)
     cleaned = F.regexp_replace(cleaned, CTRL_CLASS, " ")
     cleaned = F.regexp_replace(cleaned, HIGH_CLASS, " ")
-    return _docs(spark, sf_dir).select(
+    return read_docs(spark, sf_dir).select(
         "doc_id", cleaned.alias("cleaned")
     )
 
@@ -231,7 +207,7 @@ def clean_unicode_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 def normalize_ws_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2 normalize_whitespace (text_utils.py:142-147) as SQL."""
     s = F.concat(F.lit("  a\t"), F.col("text"), F.lit("\n\nz  "))
-    return _docs(spark, sf_dir).select(
+    return read_docs(spark, sf_dir).select(
         "doc_id",
         F.trim(F.regexp_replace(s, r"\s+", " ")).alias("normalized"),
     )
@@ -253,7 +229,7 @@ def chunk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    return _docs(spark, sf_dir).select(
+    return read_docs(spark, sf_dir).select(
         "doc_id", n_chunks("text").alias("n_chunks")
     )
 
@@ -271,7 +247,7 @@ def train_test_split(
     have (re-running the job can never migrate a document across the
     split). The %100 of a 16-bit value carries a ~0.05% bucket-size
     bias, irrelevant for splitting."""
-    return _docs(spark, sf_dir).select(
+    return read_docs(spark, sf_dir).select(
         "doc_id",
         split_bucket_expr().alias("bucket"),
         split_label_expr(test_pct).alias("split"),
@@ -310,7 +286,7 @@ def tfidf_top_terms(
     results are deterministic and oracle-checkable."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_docs(spark, sf_dir)
     n_docs = docs.count()  # one scalar action (corpus size)
     toks = docs.select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("tok")
@@ -361,7 +337,7 @@ def pack_sequences(
     only doc_id arithmetic and token counts feed the assignment."""
     from pyspark.sql import Window
 
-    n = _docs(spark, sf_dir).select(
+    n = read_docs(spark, sf_dir).select(
         "doc_id",
         (F.col("doc_id") % N_PACK_SHARDS).cast("int").alias("shard"),
         F.expr(f"size({_TOKENS})").cast("long").alias("n_tok"),
@@ -438,7 +414,7 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-aggregates over exploded lines/bigrams plus one max-filter
     join, all keyed by doc_id — no pairwise anything; the token array
     is materialized once per branch (the lambda-inlining trap)."""
-    toks = _docs(spark, sf_dir).select(
+    toks = read_docs(spark, sf_dir).select(
         "doc_id", F.length("text").alias("n_chars"), F.expr(_TOKENS).alias("t")
     )
     lines = toks.select(
@@ -623,7 +599,7 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined pass flag — the standard pretraining admission gate.
     One scan; the token array and pseudo-line array each materialize
     once per row in their own projections; zero shuffles."""
-    toks = _docs(spark, sf_dir).select(
+    toks = read_docs(spark, sf_dir).select(
         "doc_id", "text", F.expr(_TOKENS).alias("t")
     ).withColumn("L", F.expr(_gopher_lines_sql()))
     sig = toks.select(
@@ -743,7 +719,7 @@ def c4_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Filter and recomputes it per row (measured: 6 tokenizer
     copies)."""
     toks = (
-        _docs(spark, sf_dir)
+        read_docs(spark, sf_dir)
         .where(F.col("text").rlike(r"\S"))
         .select(
             "doc_id",
@@ -840,7 +816,7 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # actually sees, so the counts always agree with the redacted
     # output (a phone digit-run inside an email local part is part of
     # the <EMAIL> redaction, not a phantom n_phones hit)
-    base = _docs(spark, sf_dir).select("doc_id", aug.alias("aug"))
+    base = read_docs(spark, sf_dir).select("doc_id", aug.alias("aug"))
     r1 = base.withColumn(
         "r1", F.regexp_replace("aug", PII_EMAIL, "<EMAIL>")
     )
@@ -882,9 +858,7 @@ def _dsir_bucket(col) -> F.Column:
     )
 
 
-def dsir_weights(
-    spark: SparkSession, sf_dir: str, persist: bool = False
-) -> DataFrame:
+def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR importance weight against the English subset
     as the target domain: weight(d) = sum over tokens w of
     ln p_target(bucket(w)) - ln p_raw(bucket(w)), with add-one
@@ -898,25 +872,15 @@ def dsir_weights(
     rows at any corpus size) then hash-aggregates per doc. The corpus
     text itself never shuffles; only (doc_id, bucket) pairs do.
 
-    The tokenize+bucket stream feeds both passes; ``persist=True``
-    caches it so the corpus is SCANNED once instead of twice (the
-    VERDICT r4 item-5 knob — plan-pinned in tests/test_plans.py,
-    value-parity pinned in the same test). Default off: at driver/test
-    scale a second columnar scan is cheaper than a cache write."""
+    The tokenize+bucket stream feeds both passes; one per-invocation
+    checkpoint (narrow integer rows — the md5 bucketing ran once)
+    replaces the second tokenize+hash scan."""
     tok = (
-        _docs(spark, sf_dir)
+        read_docs(spark, sf_dir)
         .select("doc_id", "lang", F.explode(F.expr(_TOKENS)).alias("w"))
         .select("doc_id", "lang", _dsir_bucket(F.col("w")).alias("b"))
     )
-    if persist:
-        tok = tok.persist()
-    else:
-        # the bucketed token stream feeds both the feature-count pass
-        # and the scoring pass; one per-invocation checkpoint (narrow
-        # integer rows — the md5 bucketing ran once) replaces the
-        # second tokenize+hash scan. The persist knob remains the
-        # cross-query form the plan test pins.
-        tok = tok.localCheckpoint(eager=False)
+    tok = tok.localCheckpoint(eager=False)
     # ONE aggregation builds both distributions (raw count + target
     # count per bucket) — the corpus is scanned exactly twice total,
     # never once per distribution (plan-pinned: two split() branches)
@@ -964,6 +928,18 @@ VOCAB_SIZE = 20  # top-V wordforms, chosen BELOW the test corpus's 31
                  # interpolates the constant either way)
 
 
+def _top_vocab(tok: DataFrame) -> DataFrame:
+    """(w, cnt) for the top ``VOCAB_SIZE`` wordforms of a token frame
+    (one row per occurrence, column ``w``), ties broken on the token
+    string so the cut is engine-deterministic."""
+    return (
+        tok.groupBy("w")
+        .agg(F.count("*").cast("long").alias("cnt"))
+        .orderBy(F.col("cnt").desc(), F.col("w"))
+        .limit(VOCAB_SIZE)
+    )
+
+
 def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The induced vocabulary: top ``VOCAB_SIZE`` wordforms by corpus
     frequency, ties broken on the token string so the cut is
@@ -972,19 +948,8 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys at 100 TB — a plain shuffle agg, NOT a global sort: the top-V
     head is taken with a rank window over the aggregated counts, and
     Spark's TakeOrderedAndProject handles the small-V case)."""
-    counts = (
-        _docs(spark, sf_dir)
-        .select(F.explode(F.expr(_TOKENS)).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    return (
-        counts.orderBy(F.col("cnt").desc(), F.col("w"))
-        .limit(VOCAB_SIZE)
-        .select(
-            "w",
-            F.col("cnt").cast("long").alias("cnt"),
-        )
+    return _top_vocab(
+        read_docs(spark, sf_dir).select(F.explode(F.expr(_TOKENS)).alias("w"))
     )
 
 
@@ -995,21 +960,14 @@ def vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership test is a broadcast LEFT join (never a shuffle of the
     corpus tokens' payload); the per-doc rollup is one hash-aggregate
     with partial combine."""
-    tok = _docs(spark, sf_dir).select(
+    tok = read_docs(spark, sf_dir).select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("w")
     )
     # the vocabulary derives from the SAME token stream the membership
     # test scans — one per-invocation checkpoint tokenizes the corpus
-    # once where the former vocab_top_terms() arm re-scanned and
-    # re-tokenized it (identical counts, hence identical top-V cut)
+    # once (identical counts, hence identical top-V cut)
     tok = tok.localCheckpoint(eager=False)
-    vocab = (
-        tok.groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("w"))
-        .limit(VOCAB_SIZE)
-        .select("w", F.lit(1).alias("in_vocab"))
-    )
+    vocab = _top_vocab(tok).select("w", F.lit(1).alias("in_vocab"))
     return (
         tok.join(F.broadcast(vocab), "w", "left")
         .groupBy("doc_id")
@@ -1036,11 +994,7 @@ def vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def bigram_logprob(
-    spark: SparkSession,
-    sf_dir: str,
-    persist: bool = False,
-) -> DataFrame:
+def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean CONDITIONAL negative log-likelihood under the
     corpus bigram model with add-one smoothing — one n-gram order up
     from ``unigram_logprob``, toward the CCNet-style n-gram-LM quality
@@ -1058,26 +1012,16 @@ def bigram_logprob(
     counts c1 reduce FROM the bigram table (tiny second agg, never a
     corpus re-scan); V and the totals ride a broadcast one-row
     aggregate (lazy, empty-safe — the unigram_logprob r5 form); the
-    scoring join is a plain shuffle join on (w1, w2). ``persist=True``
-    caches the TOKENIZED frame — the shared parent of the bigram
-    stream, the scoring join's re-derivation, AND the vocabulary
-    aggregate — so the corpus parquet is scanned and tokenized once
-    (review r5: caching only the bigram stream would leave the
-    vocabulary scan paying a second full read)."""
-    toks = _docs(spark, sf_dir).select(
+    scoring join is a plain shuffle join on (w1, w2)."""
+    toks = read_docs(spark, sf_dir).select(
         "doc_id", F.expr(_TOKENS).alias("t")
     )
-    if persist:
-        toks = toks.persist()
-    else:
-        # the tokenized frame is the shared parent of the bigram
-        # stream (twice: count build + scoring join) and the
-        # vocabulary aggregate — four corpus tokenizations without
-        # help. One per-invocation localCheckpoint tokenizes ONCE;
-        # unlike persist() it cannot leak results into a later run
-        # (each call builds a fresh RDD). This is the documented
-        # 100 TB answer (the persist knob) made the default.
-        toks = toks.localCheckpoint(eager=False)
+    # the tokenized frame is the shared parent of the bigram stream
+    # (twice: count build + scoring join) and the vocabulary aggregate
+    # — four corpus tokenizations without help. One per-invocation
+    # localCheckpoint tokenizes ONCE; unlike persist() it cannot leak
+    # results into a later run (each call builds a fresh RDD).
+    toks = toks.localCheckpoint(eager=False)
     # CASE guard: sequence(1, size-1) is DESCENDING for size < 2 (the
     # phantom-pseudo-line trap) — a short doc must yield NO bigrams
     big = toks.select(
@@ -1091,12 +1035,14 @@ def bigram_logprob(
             )
         ).alias("g"),
     ).select("doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
-    c2 = big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    if not persist:
-        # c2 feeds both the context reduction c1 and the scoring
-        # projection — checkpoint the (bigram-type-sized) table so the
-        # aggregation runs once per invocation
-        c2 = c2.localCheckpoint(eager=False)
+    # c2 feeds both the context reduction c1 and the scoring
+    # projection — checkpoint the (bigram-type-sized) table so the
+    # aggregation runs once per invocation
+    c2 = (
+        big.groupBy("w1", "w2")
+        .agg(F.count("*").alias("c12"))
+        .localCheckpoint(eager=False)
+    )
     # context totals c1 via a window over c2 itself (guide §2.4): the
     # per-w1 sum computes in the exchange the former aggregate+join
     # paid twice — exact integer sum, identical value
@@ -1129,11 +1075,7 @@ def bigram_logprob(
 TRIGRAM_LAMBDAS = (0.7, 0.2, 0.1)  # interpolation: trigram/bigram/unigram
 
 
-def trigram_logprob(
-    spark: SparkSession,
-    sf_dir: str,
-    persist: bool = False,
-) -> DataFrame:
+def trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean negative log-likelihood under the corpus
     JELINEK-MERCER-INTERPOLATED trigram model — the top rung of the
     CCNet-style n-gram quality ladder (unigram -> bigram -> trigram):
@@ -1159,20 +1101,15 @@ def trigram_logprob(
     per trigram TYPE (4 type-table joins) and only then joins back
     to the per-document stream. All joins are inner and total: every
     document trigram exists in c123, its (w1,w2) in c12, its
-    (w2,w3)/(w2) in the bigram tables, its w3 in the unigram table.
-    ``persist=True`` caches the TOKENIZED frame — the shared parent
-    of all three gram streams (plan-pinned like bigram's)."""
+    (w2,w3)/(w2) in the bigram tables, its w3 in the unigram table."""
     l3, l2, l1 = TRIGRAM_LAMBDAS
-    toks = _docs(spark, sf_dir).select(
+    toks = read_docs(spark, sf_dir).select(
         "doc_id", F.expr(_TOKENS).alias("t")
     )
-    if persist:
-        toks = toks.persist()
-    else:
-        # shared parent of the trigram stream (x2), bigram stream, and
-        # unigram aggregate — one per-invocation materialization
-        # replaces five corpus tokenizations (see bigram_logprob)
-        toks = toks.localCheckpoint(eager=False)
+    # shared parent of the trigram stream (x2), bigram stream, and
+    # unigram aggregate — one per-invocation materialization replaces
+    # five corpus tokenizations (see bigram_logprob)
+    toks = toks.localCheckpoint(eager=False)
     # CASE guard: sequence(2, size-1) is DESCENDING for size < 3
     tri = toks.select(
         "doc_id",
@@ -1195,14 +1132,19 @@ def trigram_logprob(
             )
         ).alias("g"),
     ).select("g.b1", "g.b2")
-    c3t = tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c123"))
-    c2t = big.groupBy("b1", "b2").agg(F.count("*").alias("c23"))
-    if not persist:
-        # each count table feeds its context reduction AND the scoring
-        # join — checkpoint both (gram-type-sized) so each aggregation
-        # runs once per invocation
-        c3t = c3t.localCheckpoint(eager=False)
-        c2t = c2t.localCheckpoint(eager=False)
+    # each count table feeds its context reduction AND the scoring
+    # join — checkpoint both (gram-type-sized) so each aggregation runs
+    # once per invocation
+    c3t = (
+        tri.groupBy("w1", "w2", "w3")
+        .agg(F.count("*").alias("c123"))
+        .localCheckpoint(eager=False)
+    )
+    c2t = (
+        big.groupBy("b1", "b2")
+        .agg(F.count("*").alias("c23"))
+        .localCheckpoint(eager=False)
+    )
     # context totals via windows over the SAME tables (guide §2.4):
     # c12 is the per-(w1,w2) sum of c123 and c2 the per-b1 sum of c23
     # — exact integer sums, previously built as separate aggregates
@@ -1257,11 +1199,7 @@ def trigram_logprob(
     )
 
 
-def ccnet_ppl_buckets(
-    spark: SparkSession,
-    sf_dir: str,
-    persist: bool = False,
-) -> DataFrame:
+def ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity terciles (Wenzek et al., "CCNet:
     Extracting High Quality Monolingual Datasets from Web Crawl
     Data"): score every document with the corpus trigram LM
@@ -1279,23 +1217,14 @@ def ccnet_ppl_buckets(
     that tiny table, and thresholds t_k = min{v : 3*cum(v) >= k*n}.
     Buckets then assign by broadcast comparison. Ties share a value
     and therefore a bucket, so boundary buckets can exceed n/3 by
-    construction (exactly how any exact value-quantile behaves).
-
-    ``persist=True`` caches the SCORED table (doc-count-sized rows,
-    never corpus text) — the shared parent of the histogram pass and
-    the final projection; without it the whole trigram-LM pipeline
-    runs twice."""
+    construction (exactly how any exact value-quantile behaves)."""
     from pyspark.sql import Window
 
-    base = trigram_logprob(spark, sf_dir, persist=persist)
-    if persist:
-        base = base.persist()
-    else:
-        # base feeds the histogram pass AND the final projection —
-        # without help the whole trigram-LM pipeline runs twice; one
-        # per-invocation checkpoint of the doc-sized scored table
-        # halves the query (guide §5 caching rule)
-        base = base.localCheckpoint(eager=False)
+    # base feeds the histogram pass AND the final projection — without
+    # help the whole trigram-LM pipeline runs twice; one per-invocation
+    # checkpoint of the doc-sized scored table (never corpus text)
+    # halves the query (guide §5 caching rule)
+    base = trigram_logprob(spark, sf_dir).localCheckpoint(eager=False)
     hist = base.groupBy("mean_nll").agg(F.count("*").alias("n"))
     w_cum = (
         Window.orderBy("mean_nll")
@@ -1335,12 +1264,7 @@ def ccnet_ppl_buckets(
     )
 
 
-def unigram_logprob(
-    spark: SparkSession,
-    sf_dir: str,
-    counts: DataFrame | None = None,
-    persist: bool = False,
-) -> DataFrame:
+def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean token negative log-likelihood under the
     corpus unigram distribution with add-one smoothing:
     nll(d) = -(1/|d|) * sum_w ln((c(w) + 1) / (T + V)).
@@ -1358,25 +1282,14 @@ def unigram_logprob(
     (which would serialize it through one task).
 
     The counts aggregation feeds both the totals and the scoring
-    join; without help it therefore computes twice. A 100 TB run
-    passes ``persist=True`` (cache the counts table — one execution,
-    plan-pinned in tests/test_plans.py) or supplies a precomputed
-    ``counts`` DataFrame (``(w, c)`` — the two-input form, mirroring
-    ``decontaminate``'s benchmark param: a production LM's count
-    table is built once and reused across scoring runs)."""
-    tok = _docs(spark, sf_dir).select(
+    join, so it computes twice: construction must not run a job (the
+    ADVICE-r4 pin), and the heavier multi-consumer pipelines (bigram,
+    trigram, ccnet, dsir, bm25, cms) checkpoint instead because their
+    shared parents are consumed 3-5x, not 2x."""
+    tok = read_docs(spark, sf_dir).select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("w")
     )
-    if counts is None:
-        counts = tok.groupBy("w").agg(F.count("*").alias("c"))
-        # default path deliberately stays lazy (construction must not
-        # run a job — the ADVICE-r4 pin): counts computes twice, and
-        # the persist=True knob / precomputed-counts param remain the
-        # scale answers. The heavier multi-consumer pipelines (bigram,
-        # trigram, ccnet, dsir, bm25, cms) checkpoint instead — their
-        # shared parents are consumed 3-5x, not 2x.
-    if persist:
-        counts = counts.persist()
+    counts = tok.groupBy("w").agg(F.count("*").alias("c"))
     tot = counts.agg(
         F.sum("c").cast("double").alias("t_tot"),
         F.count("*").cast("double").alias("v"),
@@ -1448,7 +1361,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query set would be an external dictionary instead; the sketch
     itself never grows. Overestimate-only + monotone-merge properties
     are pinned in tests/test_curation_edge.py."""
-    tok = _docs(spark, sf_dir).select(F.explode(F.expr(_TOKENS)).alias("w"))
+    tok = read_docs(spark, sf_dir).select(F.explode(F.expr(_TOKENS)).alias("w"))
     # Aggregate to DISTINCT tokens before any hashing (guide §2.3
     # "aggregate before you shuffle"): the previous shape evaluated
     # the Kirsch-Mitzenmacher cell transform — with the md5 halves
@@ -1526,7 +1439,7 @@ def bm25_topk(
     from pyspark.sql import Window
 
     nq = BM25_N_QUERIES
-    base = _docs(spark, sf_dir).select(
+    base = read_docs(spark, sf_dir).select(
         "doc_id", F.expr(_TOKENS).alias("t")
         # shared parent of the corpus-stats aggregate, the candidate
         # postings, and the query-term table: one scan+tokenize per
@@ -1642,7 +1555,7 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return (
-        _docs(spark, sf_dir)
+        read_docs(spark, sf_dir)
         .where(F.col("text").isNotNull() & (F.col("text") != ""))
         .select("doc_id", ent("text").alias("s"))
         .select("doc_id", "s.*")

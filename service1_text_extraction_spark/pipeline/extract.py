@@ -79,19 +79,6 @@ DEFAULT_N_BUCKETS = 64
 DEFAULT_SALT = 16
 
 
-_RESULT_COLUMNS = [
-    "text",
-    "method",
-    "error",
-    "spans",
-    "bytes_in",
-    "chars_out",
-    "boilerplate_ratio",
-    "layout_text",
-    "password_used",
-]
-
-
 def _result_tuple(r) -> tuple:
     return (
         r.text,
@@ -106,48 +93,29 @@ def _result_tuple(r) -> tuple:
     )
 
 
-@F.pandas_udf(RESULT_FIELDS)
-def extract_turn_udf(payloads: pd.Series) -> pd.DataFrame:
-    """Arrow-batched turn extraction: one struct row per payload.
+def _extract_udf(pw_map: dict[str, list[str]], ocr_spec: str | None):
+    """Arrow-batched turn extraction over ``(conv_id, text)``: one
+    struct row per payload.
 
     Identical payloads inside a batch (re-forwarded attachments,
     boilerplate turns) are extracted once and fanned out — free on
-    unique corpora, large on duplicate-heavy real transcripts.
-    """
-    memo: dict[str, tuple] = {}
-    rows = []
-    for payload in payloads:
-        key = payload if isinstance(payload, str) else ""
-        cached = memo.get(key)
-        if cached is None:
-            r = extract_turn(payload if isinstance(payload, str) else None)
-            cached = _result_tuple(r)
-            memo[key] = cached
-        rows.append(cached)
-    return pd.DataFrame(rows, columns=_RESULT_COLUMNS)
-
-
-def _custom_extract_udf(
-    pw_map: dict[str, list[str]] | None = None,
-    ocr_spec: str | None = None,
-):
-    """Parameterized UDF variant, used when either opt-in is present.
+    unique corpora, large on duplicate-heavy real transcripts. The memo
+    keys on (payload, the conv's password candidates), so identical
+    payloads under different password sets never cross.
 
     ``pw_map`` (reference password store,
     file_management_service.py:119-212) maps conv_id to candidate
     passwords (≤3 tried per document, after the empty password). The
     map ships to workers inside the UDF closure — the
     broadcast-variable analogue; password stores are KBs even at
-    100 TB corpus scale. Memoization keys on (payload, conv's
-    candidates) so identical payloads under different password sets
-    never cross.
+    100 TB corpus scale.
 
     ``ocr_spec`` is a ``"package.module:callable"`` OCR-hook spec
     (reference F5 fallback, core_pdf_processor.py:467-561), resolved
-    and installed once per worker via ``payload.resolve_ocr_hook`` —
+    and installed once per batch via ``payload.resolve_ocr_hook`` —
     a string survives serialization to executor Python workers where
     a driver-side callable would not."""
-    pw_map = pw_map or {}
+    columns = RESULT_FIELDS.fieldNames()
 
     @F.pandas_udf(RESULT_FIELDS)
     def udf(conv_ids: pd.Series, payloads: pd.Series) -> pd.DataFrame:
@@ -185,7 +153,7 @@ def _custom_extract_udf(
                     cached = _result_tuple(r)
                     memo[key] = cached
                 rows.append(cached)
-            return pd.DataFrame(rows, columns=_RESULT_COLUMNS)
+            return pd.DataFrame(rows, columns=columns)
         finally:
             if ocr_spec:
                 payload_mod.set_ocr_hook(prev_hook)
@@ -277,33 +245,10 @@ def run_extraction(
         else:
             df = df.repartition(F.col("bucket_id"), salt_key)
 
-    if passwords is None and ocr_hook is None:
-        ex_col = extract_turn_udf(F.col("text"))
-    else:
-        pw_map = (
-            {str(k): list(v)[:3] for k, v in passwords.items()}
-            if passwords
-            else None
-        )
-        ex_col = _custom_extract_udf(pw_map, ocr_hook)(
-            F.col("conv_id"), F.col("text")
-        )
+    pw_map = {str(k): list(v)[:3] for k, v in (passwords or {}).items()}
+    ex_col = _extract_udf(pw_map, ocr_hook)(F.col("conv_id"), F.col("text"))
     extracted = df.withColumn("ex", ex_col).select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        "ts",
-        "bucket_id",
-        F.col("ex.text").alias("text"),
-        F.col("ex.method").alias("method"),
-        F.col("ex.error").alias("error"),
-        F.col("ex.spans").alias("spans"),
-        F.col("ex.bytes_in").alias("bytes_in"),
-        F.col("ex.chars_out").alias("chars_out"),
-        F.col("ex.boilerplate_ratio").alias("boilerplate_ratio"),
-        F.col("ex.layout_text").alias("layout_text"),
-        F.col("ex.password_used").alias("password_used"),
+        "conv_id", "turn_idx", "role", "tool", "ts", "bucket_id", "ex.*"
     )
 
     # W1: stable turn ordering (reference 1-based page loop,

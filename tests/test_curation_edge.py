@@ -165,8 +165,7 @@ def test_ist_format_session_tz_free(spark, tmp_path):
 
 def test_bigram_logprob_short_docs_and_persist(spark, tmp_path):
     """A doc with < 2 tokens has no bigrams and must be ABSENT in both
-    engines (the descending-sequence trap); persist=True is a pure
-    execution knob."""
+    engines (the descending-sequence trap)."""
     rows = EDGE_DOCS + [(9, "solo", "en", "src9", 4)]
     sf = _mini_docs(spark, tmp_path, rows)
     from service1_text_extraction_spark.functions import textstats
@@ -177,21 +176,15 @@ def test_bigram_logprob_short_docs_and_persist(spark, tmp_path):
     }
     assert set(got) == {2, 3}  # empty/ws/one-token docs absent
     assert got[2][0] == 7 and got[3][0] == 11
-    pers = {
-        r.doc_id: (r.n_bigrams, r.mean_nll)
-        for r in textstats.bigram_logprob(spark, sf, persist=True).collect()
-    }
-    assert pers == got
-    spark.catalog.clearCache()
     _assert_parity(spark, sf, "bigram_logprob")
 
 
 def test_trigram_logprob_short_docs_and_persist(spark, tmp_path):
     """Docs with < 3 tokens have no trigrams and must be ABSENT in
     both engines (empty, whitespace, one- and two-token docs — the
-    descending sequence(2, size-1) trap); persist=True is a pure
-    execution knob; interpolation weights sum to 1 so mean_nll is a
-    proper NLL (> 0 for any non-degenerate corpus)."""
+    descending sequence(2, size-1) trap); interpolation weights sum to
+    1 so mean_nll is a proper NLL (> 0 for any non-degenerate
+    corpus)."""
     rows = EDGE_DOCS + [
         (9, "solo", "en", "src9", 4),
         (10, "just two", "en", "src10", 8),
@@ -207,12 +200,6 @@ def test_trigram_logprob_short_docs_and_persist(spark, tmp_path):
     assert set(got) == {2, 3}  # <3-token docs absent
     assert got[2][0] == 6 and got[3][0] == 10  # n_tokens - 2
     assert all(nll > 0 for _, nll in got.values())
-    pers = {
-        r.doc_id: (r.n_trigrams, r.mean_nll)
-        for r in textstats.trigram_logprob(spark, sf, persist=True).collect()
-    }
-    assert pers == got
-    spark.catalog.clearCache()
     _assert_parity(spark, sf, "trigram_logprob")
 
 
@@ -392,41 +379,17 @@ def test_unigram_logprob_empty_corpus_and_laziness(spark, tmp_path):
 
 
 def test_persist_and_precomputed_paths_agree(spark, tmp_path):
-    """The persist=True and precomputed-counts paths of the
-    twice-scanned pipelines are pure execution-shape knobs — results
-    must be bit-identical to the default path (non-vacuously)."""
+    """The twice-scanned pipelines (unigram_logprob re-derives its
+    counts table, dsir_weights checkpoints its bucketed token stream)
+    score the edge corpus non-vacuously and agree with their oracles
+    on it."""
     sf = _mini_docs(spark, tmp_path, EDGE_DOCS)
-    from pyspark.sql import functions as F
-
     from service1_text_extraction_spark.functions import textstats
 
-    base = sorted(
-        map(tuple, textstats.unigram_logprob(spark, sf).collect())
-    )
-    pers = sorted(
-        map(
-            tuple,
-            textstats.unigram_logprob(spark, sf, persist=True).collect(),
-        )
-    )
-    tok = spark.read.parquet(f"{sf}/documents.parquet").select(
-        F.explode(F.expr(textstats._TOKENS)).alias("w")
-    )
-    pre = tok.groupBy("w").agg(F.count("*").alias("c"))
-    supplied = sorted(
-        map(
-            tuple,
-            textstats.unigram_logprob(spark, sf, counts=pre).collect(),
-        )
-    )
-    assert base == pers == supplied and base
-
-    d_base = sorted(map(tuple, textstats.dsir_weights(spark, sf).collect()))
-    d_pers = sorted(
-        map(tuple, textstats.dsir_weights(spark, sf, persist=True).collect())
-    )
-    assert d_base == d_pers and d_base
-    spark.catalog.clearCache()
+    assert textstats.unigram_logprob(spark, sf).collect()
+    assert textstats.dsir_weights(spark, sf).collect()
+    _assert_parity(spark, sf, "unigram_logprob")
+    _assert_parity(spark, sf, "dsir_weights")
 
 
 def _mini_emb(spark, tmp_path, rows):
@@ -633,15 +596,6 @@ def test_ccnet_ppl_buckets_terciles_and_ties(spark, tmp_path):
     order = [b for b in ("head", "middle", "tail") if b in by_bucket]
     for lo, hi in zip(order, order[1:]):
         assert max(by_bucket[lo]) <= min(by_bucket[hi]), by_bucket
-    # persist knob is a pure execution hint
-    pers = {
-        r.doc_id: (r.mean_nll, r.ppl_bucket)
-        for r in textstats.ccnet_ppl_buckets(
-            spark, sf, persist=True
-        ).collect()
-    }
-    assert pers == got
-    spark.catalog.clearCache()
     _assert_parity(spark, sf, "ccnet_ppl_buckets")
 
 
@@ -862,10 +816,11 @@ def test_cms_overestimates_never_under(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from service1_text_extraction_spark.functions import textstats
+    from service1_text_extraction_spark.functions.spread import read_docs
 
     hh = textstats.cms_heavy_hitters(spark, sf_dir)
     exact = (
-        textstats._docs(spark, sf_dir)
+        read_docs(spark, sf_dir)
         .select(F.explode(F.expr(textstats._TOKENS)).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("true_cnt"))
@@ -946,8 +901,9 @@ def test_cms_sketch_merges_by_addition(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from service1_text_extraction_spark.functions import textstats
+    from service1_text_extraction_spark.functions.spread import read_docs
 
-    docs = textstats._docs(spark, sf_dir)
+    docs = read_docs(spark, sf_dir)
     tok_of = lambda d: d.select(
         F.explode(F.expr(textstats._TOKENS)).alias("w")
     )

@@ -342,90 +342,47 @@ def test_probe_paths_agree(spark, sf_dir):
     assert rank1 == primary
 
 
-def test_simhash_paths_agree(spark, sf_dir):
-    """The Arrow per-doc SimHash (default) and the SQL
-    explode+distinct+groupBy shape must produce identical fingerprints
-    and identical near-dup pairs — both are exact integer math over
-    the same md5 nibbles, including Java-\\s-only tokenization and
-    absent-row semantics for token-less documents."""
-    from service1_text_extraction_spark.functions import dedup
+def _edge_docs_duckdb(spark, tmp, rows, sql):
+    """Write ``rows`` as a documents.parquet under ``tmp`` and run
+    ``sql`` over it in DuckDB; returns (parquet dir, result rows)."""
+    import os
 
-    def both(fn):
-        prev = dedup.SIMHASH_STRATEGY
-        try:
-            dedup.SIMHASH_STRATEGY = "arrow"
-            a = sorted(map(tuple, fn().collect()))
-            dedup.SIMHASH_STRATEGY = "sql"
-            b = sorted(map(tuple, fn().collect()))
-        finally:
-            dedup.SIMHASH_STRATEGY = prev
-        return a, b
-
-    fa, fb = both(lambda: dedup.simhash_fingerprints(spark, sf_dir))
-    assert fa == fb and fa
-    pa, pb = both(lambda: dedup.simhash_neardup_pairs(spark, sf_dir))
-    assert pa == pb
+    path = os.path.join(tmp, "d")
+    docs = os.path.join(path, "documents.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(docs)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{docs}/*.parquet'"
+    )
+    return path, con.execute(sql).fetchall()
 
 
 def test_simhash_arrow_tokenizer_edges(spark):
-    """Arrow SimHash must replicate Spark's split semantics exactly:
-    Java \\s is ASCII-only (a non-breaking space is NOT a separator),
-    and null/whitespace-only docs are ABSENT (as the SQL explode emits
+    """Arrow SimHash must replicate Spark's split semantics exactly —
+    checked against the DuckDB oracle over the same parquet: Java \\s
+    is ASCII-only (a non-breaking space is NOT a separator), and
+    null/whitespace-only docs are ABSENT (as the oracle's unnest emits
     no row), not null-fingerprinted."""
+    import tempfile
+
     from service1_text_extraction_spark.functions import dedup
 
     rows = [
         (1, "Hello\tWorld\nhello  world"),
-        (2, "nbsp joined stays one-token"),
+        (2, "nbsp\u00a0 joined stays one-token"),
         (3, "   \t  "),
         (4, None),
         (5, "x"),
     ]
-    import os
-    import tempfile
-
-    df = spark.createDataFrame(rows, "doc_id long, text string")
     with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "d")
-        df.write.parquet(os.path.join(path, "documents.parquet"))
-        prev = dedup.SIMHASH_STRATEGY
-        try:
-            dedup.SIMHASH_STRATEGY = "arrow"
-            a = {r.doc_id: r.simhash
-                 for r in dedup.simhash_fingerprints(spark, path).collect()}
-            dedup.SIMHASH_STRATEGY = "sql"
-            b = {r.doc_id: r.simhash
-                 for r in dedup.simhash_fingerprints(spark, path).collect()}
-        finally:
-            dedup.SIMHASH_STRATEGY = prev
-    assert a == b
+        path, duck = _edge_docs_duckdb(
+            spark, tmp, rows, entry_mod.oracle_sql()["dedup_simhash"]
+        )
+        a = {r.doc_id: r.simhash
+             for r in dedup.simhash_fingerprints(spark, path).collect()}
+    assert a == dict(duck)
     assert set(a) == {1, 2, 5}  # 3 (ws-only) and 4 (null) absent
     assert all(len(v) == 64 and set(v) <= {"0", "1"} for v in a.values())
-
-
-def test_minhash_paths_agree(spark, sf_dir):
-    """The Arrow per-doc MinHash (default) and the SQL
-    explode+distinct+groupBy shape must produce identical signatures
-    and identical band candidates — both are the same (a + i*b) mod
-    2^32 integer math over the same md5 halves, and min() makes the
-    SQL path's shingle dedup semantically inert."""
-    from service1_text_extraction_spark.functions import dedup
-
-    def both(fn):
-        prev = dedup.MINHASH_STRATEGY
-        try:
-            dedup.MINHASH_STRATEGY = "arrow"
-            a = sorted(map(tuple, fn().collect()))
-            dedup.MINHASH_STRATEGY = "sql"
-            b = sorted(map(tuple, fn().collect()))
-        finally:
-            dedup.MINHASH_STRATEGY = prev
-        return a, b
-
-    sa, sb = both(lambda: dedup.minhash_signatures(spark, sf_dir))
-    assert sa == sb and sa
-    ca, cb = both(lambda: dedup.minhash_band_candidates(spark, sf_dir))
-    assert ca == cb
 
 
 def test_minhash_arrow_shingle_edges(spark):
@@ -435,6 +392,8 @@ def test_minhash_arrow_shingle_edges(spark):
     signature, unlike SimHash's absent rows), the bare token for
     1-token docs, 'a b' for 2-token docs — and Java-\\s-only splitting
     (NBSP and U+2028 do NOT separate tokens)."""
+    import tempfile
+
     from service1_text_extraction_spark.functions import dedup
 
     rows = [
@@ -443,82 +402,22 @@ def test_minhash_arrow_shingle_edges(spark):
         (3, "solo"),                   # bare-token shingle
         (4, "   \t  "),                # token-less -> '' shingle
         (5, None),                     # null -> '' shingle
-        (6, "nbsp pair stays one token"),
-        (7, "line sep also one token"),
+        (6, "nbsp\u00a0 pair stays one token"),
+        (7, "line\u2028sep also one token"),
     ]
-    import os
-    import tempfile
-
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sql = (
+        f"WITH {entry_mod._TOKS_CTE}, {entry_mod._SHINGLES_CTE}"
+        f" SELECT doc_id, {entry_mod._MINHASH_AGGS} FROM sh GROUP BY doc_id"
+    )
     with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "d")
-        df.write.parquet(os.path.join(path, "documents.parquet"))
-
-        prev = dedup.MINHASH_STRATEGY
-        try:
-            dedup.MINHASH_STRATEGY = "arrow"
-            a = sorted(
-                map(tuple, dedup.minhash_signatures(spark, path).collect())
-            )
-            dedup.MINHASH_STRATEGY = "sql"
-            b = sorted(
-                map(tuple, dedup.minhash_signatures(spark, path).collect())
-            )
-        finally:
-            dedup.MINHASH_STRATEGY = prev
-    assert a == b
+        path, duck = _edge_docs_duckdb(spark, tmp, rows, sql)
+        a = sorted(
+            map(tuple, dedup.minhash_signatures(spark, path).collect())
+        )
+    assert a == sorted(duck)
     assert [r[0] for r in a] == [1, 2, 3, 4, 5, 6, 7]
     # 4 and 5 share the '' shingle, hence identical signatures
     assert a[3][1:] == a[4][1:]
-
-
-def test_pair_dot_paths_agree(spark, sf_dir):
-    """The Arrow pair-dot fold must be bit-equal to the interpreted
-    JVM ``aggregate(zip_with(...))`` form (sequential per-dimension
-    accumulation — the _fold_dots argument applied to pairs): the
-    semantic-dedup edge set, with its 4dp-rounded cosines, must be
-    identical under both strategies."""
-    from service1_text_extraction_spark.functions import similarity
-
-    prev = similarity.PAIR_DOT_STRATEGY
-    try:
-        similarity.PAIR_DOT_STRATEGY = "arrow"
-        arrow = {
-            (r.a_id, r.b_id): r.cos
-            for r in similarity.semantic_dedup(spark, sf_dir).collect()
-        }
-        similarity.PAIR_DOT_STRATEGY = "sql"
-        sql = {
-            (r.a_id, r.b_id): r.cos
-            for r in similarity.semantic_dedup(spark, sf_dir).collect()
-        }
-    finally:
-        similarity.PAIR_DOT_STRATEGY = prev
-    assert arrow == sql
-
-
-def test_fingerprint_paths_agree(spark, sf_dir):
-    """The Arrow min-md5-8-gram kernel must emit the identical hex
-    fingerprint as the SQL transform/array_min form (min-by-digest ==
-    min-by-hex: hex encoding is byte-wise monotone), including the
-    short-text (single truncated gram) fallback."""
-    from service1_text_extraction_spark.functions import textstats
-
-    prev = textstats.FP_STRATEGY
-    try:
-        textstats.FP_STRATEGY = "arrow"
-        arrow = {
-            r.doc_id: r.fingerprint
-            for r in textstats.doc_fingerprint(spark, sf_dir).collect()
-        }
-        textstats.FP_STRATEGY = "sql"
-        sql = {
-            r.doc_id: r.fingerprint
-            for r in textstats.doc_fingerprint(spark, sf_dir).collect()
-        }
-    finally:
-        textstats.FP_STRATEGY = prev
-    assert arrow == sql
 
 
 def test_verified_pairs_affix_trim_matches_plain_lev(spark, sf_dir):
@@ -534,37 +433,3 @@ def test_verified_pairs_affix_trim_matches_plain_lev(spark, sf_dir):
     assert a == b
 
 
-def test_shingle_sketch_paths_agree(spark, sf_dir):
-    """The Arrow shingle-sketch kernel must reproduce the SQL
-    explode+md5 derivation exactly: identical HLL estimates and OPH
-    stripe-Jaccard rows under both strategies (the sketch merges are
-    order-free integer max/sum/min, so equality is structural)."""
-    from service1_text_extraction_spark.functions import dedup
-
-    prev = dedup.SHINGLE_SKETCH_STRATEGY
-    out = {}
-    try:
-        for strat in ("arrow", "sql"):
-            dedup.SHINGLE_SKETCH_STRATEGY = strat
-            hll = sorted(
-                map(
-                    tuple,
-                    dedup.hll_distinct_shingles(spark, sf_dir).collect(),
-                )
-            )
-            oph = sorted(
-                map(
-                    tuple,
-                    dedup.minhash_source_jaccard(spark, sf_dir).collect(),
-                )
-            )
-            ovl = sorted(
-                map(
-                    tuple,
-                    dedup.source_overlap_stats(spark, sf_dir).collect(),
-                )
-            )
-            out[strat] = (hll, oph, ovl)
-    finally:
-        dedup.SHINGLE_SKETCH_STRATEGY = prev
-    assert out["arrow"] == out["sql"]
